@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 from yelp_data_pipeline_spark import pipelines
 from yelp_data_pipeline_spark.operators import dedup as dd
 from yelp_data_pipeline_spark.operators import textops as tx
+from yelp_data_pipeline_spark.session import release_tracked
 from yelp_data_pipeline_spark.tables import load_table
 
 from conftest import SF_DIR
@@ -46,3 +47,7 @@ def test_curate_documents_job(spark, tmp_path):
     pruned = spark.read.parquet(out_dir).filter(F.col("lang") == one_lang)
     n_dir = spark.read.parquet(f"{out_dir}/lang={one_lang}").count()
     assert pruned.count() == n_dir > 0
+
+    # The job leaves its held frames to its driver: the returned plan
+    # reads them until released here.
+    release_tracked()

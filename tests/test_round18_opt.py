@@ -6,13 +6,14 @@ claims so a later refactor cannot silently break them:
 
 - `_lit_vector` / `_dot_lit_expr` build literal-vector expressions via
   one SQL parse instead of 2·dim py4j calls — claimed bit-identical to
-  the element-wise ``F.lit`` / ``F.zip_with``+``F.aggregate`` forms.
+  the element-wise ``F.lit`` / ``F.zip_with``+``F.aggregate`` forms,
+  non-finite entries included.
 - `jl_project` builds each component's dot-fold as one ``F.expr``.
 - `cosine_neardup_pairs(use_pandas_projection=True)` claims exact sign
   bits on INTEGER-valued vectors (the hashed-text-embedding rows wired
   in registry/warehouse_b.py rely on this).
 - `connected_components` runs ONE job per round via a lazy
-  localCheckpoint; labels must stay exact and the returned relation
+  checkpoint; labels must stay exact and the returned relation
   must be checkpoint-rooted.
 - `_top_pc_state` mirrors the old in-plan NULL / NaN / div-by-zero
   semantics in its driver-side power iteration (advisor r17 items).
@@ -71,6 +72,22 @@ class TestLitVector:
             sim._dot_lit_expr("u", w).alias("fast"), slow.alias("slow")
         ).first()
         assert _bits(row["fast"]) == _bits(row["slow"])
+
+        # Non-finite entries have no SQL literal; the expression must
+        # still build and fold like the Python-built form.
+        w = [1.5, math.inf, -math.inf, math.nan]
+        df = spark.createDataFrame([([2.0, 1.0, 0.0, 1.0],)], "u array<double>")
+        slow = dot(F.col("u"), F.array(*[F.lit(x) for x in w]))
+        row = df.select(
+            sim._dot_lit_expr("u", w).alias("fast"), slow.alias("slow")
+        ).first()
+        assert math.isnan(row["fast"]) and math.isnan(row["slow"])
+        df = spark.createDataFrame([([2.0, 1.0],)], "u array<double>")
+        row = df.select(
+            sim._dot_lit_expr("u", w[:2]).alias("fast"),
+            dot(F.col("u"), F.array(*[F.lit(x) for x in w[:2]])).alias("slow"),
+        ).first()
+        assert row["fast"] == row["slow"] == math.inf
 
 
 class TestJlProjectExprFold:
@@ -176,12 +193,13 @@ class TestTopPcDegenerateInputs:
         )
         out = sim.embedding_top_pc(df, dim=4).collect()
         # dim rows + Rayleigh (0) + trace (-1); zero covariance → the
-        # iteration walks through 0/0 = NaN exactly like Spark doubles.
+        # normalization divides by 0.0, which is NULL like Spark's
+        # non-ANSI Divide.
         assert len(out) == 6
         by_dim = {r["dim"]: r["loading"] for r in out}
         assert by_dim[-1] == 0.0  # trace of the zero matrix
         for d in (1, 2, 3, 4):
-            assert by_dim[d] is None or math.isnan(by_dim[d])
+            assert by_dim[d] is None
 
     def test_short_vectors_propagate_null(self, spark):
         # Vectors shorter than dim: element_at → NULL, every covariance

@@ -169,18 +169,71 @@ def test_asof_attaches_null_value_from_latest_right_row(spark):
     assert row["val"] is None
 
 
-def test_release_tracked_frees_minhash_cache(spark):
-    from yelp_data_pipeline_spark.operators import dedup as dd
-    from yelp_data_pipeline_spark.session import release_tracked
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
+
+def test_release_tracked_frees_minhash_cache(spark):
+    """release_tracked() frees persists AND checkpoints: the MinHash
+    caches, every connected_components round and a cut_lineage arm
+    built on a worker thread leave no persistent RDD behind."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from yelp_data_pipeline_spark.operators import dedup as dd
+    from yelp_data_pipeline_spark.operators import graph
+    from yelp_data_pipeline_spark.session import cut_lineage, release_tracked
+
+    release_tracked()
+    before = _persistent_rdd_ids(spark)
     docs = spark.createDataFrame(
         [(i, "the quick brown fox jumps over the lazy dog %d" % (i % 3,))
          for i in range(30)],
         "doc_id long, text string",
     )
     dd.minhash_lsh_pairs(docs, "doc_id", "text", k=8, bands=4).collect()
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11)], "src long, dst long"
+    )
+    labels = graph.connected_components(edges)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        deg = pool.submit(
+            lambda: cut_lineage(edges.groupBy("src").count())
+        ).result()
+    got = labels.join(deg, labels["node"] == deg["src"], "left").collect()
+    assert len(got) == 6
     assert release_tracked() >= 1
+    assert _persistent_rdd_ids(spark) - before == set()
     assert not release_tracked()
+
+
+def test_storage_scope_keeps_frames_held_outside_it(spark, tmp_path):
+    """A sink's storage scope frees what it registered and nothing
+    else: a frame held by the enclosing unit of work stays cached."""
+    from yelp_data_pipeline_spark.session import (
+        release_tracked,
+        storage_scope,
+        track_persist,
+    )
+    from yelp_data_pipeline_spark.streaming.sinks import freeze_dedup_index
+
+    release_tracked()
+    outer = track_persist(spark.range(10))
+    outer.count()
+    before = _persistent_rdd_ids(spark)
+    corpus = spark.createDataFrame(
+        [(i, "red green blue yellow purple %d" % (i % 3,)) for i in range(20)],
+        "doc_id long, text string",
+    )
+    freeze_dedup_index(corpus, str(tmp_path / "index"), k=8, bands=4)
+    assert outer.is_cached
+    assert _persistent_rdd_ids(spark) - before == set()
+
+    with storage_scope():
+        inner = track_persist(spark.range(20))
+        inner.count()
+    assert outer.is_cached and not inner.is_cached
+    assert release_tracked() == 1
+    assert not outer.is_cached
 
 
 def test_salted_join_matches_plain_join(spark):

@@ -17,7 +17,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 from yelp_data_pipeline_spark.queries import registry
-from yelp_data_pipeline_spark.session import get_spark
+from yelp_data_pipeline_spark.session import get_spark, release_tracked
 
 DEFAULT_AUDIT = [
     "pricing_summary",
@@ -571,6 +571,7 @@ def main() -> int:
             return 2
         df = specs[name].fn(spark, sf_dir)
         a = audit(name, df)
+        release_tracked()
         flags = "NESTED-LOOP!" if a["nested_loop"] else (
             "inlist-cross" if a["inlist_cross"] else
             "ckpt-cross" if a["ckpt_cross"] else

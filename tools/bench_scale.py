@@ -544,6 +544,7 @@ def main_curate(replicas: int) -> int:
         t0 = time.perf_counter()
         pipelines.curate_documents_job(spark, sf_dir, out)
         stages["end_to_end_write"] = round(time.perf_counter() - t0, 3)
+        release_tracked()
         shutil.rmtree(out, ignore_errors=True)
         results[tag] = stages
 

@@ -3,7 +3,9 @@
 Runs every registry query on Spark and its oracle on DuckDB at the
 given SF dir, then compares row count, sorted column names, and an
 order-insensitive value hash (floats canonicalized via repr of the
-exact double). Usage:
+exact double). A query that leaves a persistent RDD behind once
+``release_tracked()`` has run is reported as ``LEAK`` and fails: storage
+is bounded per query. Usage:
 
     python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -44,6 +46,10 @@ def _hash_rows(cols, rows) -> str:
     return h.hexdigest()
 
 
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -59,15 +65,23 @@ def main() -> int:
         if only and spec.name not in only:
             continue
         t0 = time.time()
+        held0 = _persistent_rdds(spark)
         try:
             sdf = spec.fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            release_tracked()
         except Exception:
             print(f"FAIL {spec.name}: spark error")
             traceback.print_exc()
             failures.append(spec.name)
+            srows = None
+        release_tracked()
+        leaked = len(_persistent_rdds(spark) - held0)
+        if leaked:
+            print(f"LEAK {spec.name}: +{leaked} persistent RDDs")
+            if srows is not None:
+                failures.append(spec.name)
+        if srows is None:
             continue
         if spec.oracle is None:
             print(f"ok?  {spec.name}: rows-only ({len(srows)} rows, "

@@ -62,7 +62,7 @@ def main(argv: list[str] | None = None) -> int:
             print(name)
         return 0
 
-    from .session import get_spark
+    from .session import get_spark, storage_scope
 
     spark = get_spark("cli")
     spark.sparkContext.setLogLevel("WARN")
@@ -83,10 +83,11 @@ def main(argv: list[str] | None = None) -> int:
     from . import pipelines
 
     if args.cmd == "curate":
-        curated = pipelines.curate_documents_job(
-            spark, args.sf_dir, args.out, min_quality=args.min_quality
-        )
-        print(f"curated: {curated.count()} rows -> {args.out}")
+        with storage_scope():
+            curated = pipelines.curate_documents_job(
+                spark, args.sf_dir, args.out, min_quality=args.min_quality
+            )
+            print(f"curated: {curated.count()} rows -> {args.out}")
         return 0
 
     if args.cmd == "backfill":

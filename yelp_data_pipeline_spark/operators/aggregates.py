@@ -706,19 +706,21 @@ def kmv_set_estimates(
     the product ciÂ·est_∪ stays far inside a double's exact-integer
     range, so the one rounded division is engine-identical.
 
-    Each input is scanned ONCE (sketches are 256-row localCheckpoints,
+    Each input is scanned ONCE (sketches are 256-row checkpoints,
     re-used by the union and membership joins); everything after the
     two k-min passes operates on ≤k-row relations — broadcast-only,
     no shuffle of data rows. Returns one row:
     (est_a, est_b, est_union, est_intersection).
     """
+    from ..session import cut_lineage
+
     def sketch(df: DataFrame, col: str) -> DataFrame:
-        return (
+        return cut_lineage(
             df.select(md5_long(F.col(col).cast("string")).alias("h"))
             .distinct()
             .orderBy(F.col("h").asc())
-            .limit(k)
-            .localCheckpoint(eager=False)
+            .limit(k),
+            eager=False,
         )
 
     def estimate(sk: DataFrame, out: str) -> DataFrame:
@@ -734,12 +736,9 @@ def kmv_set_estimates(
 
     ka = sketch(df_a, col_a)
     kb = sketch(df_b, col_b)
-    ku = (
-        ka.union(kb)
-        .distinct()
-        .orderBy(F.col("h").asc())
-        .limit(k)
-        .localCheckpoint(eager=False)
+    ku = cut_lineage(
+        ka.union(kb).distinct().orderBy(F.col("h").asc()).limit(k),
+        eager=False,
     )
     ci = (
         ku.join(ka, "h", "left_semi")

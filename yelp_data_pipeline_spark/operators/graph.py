@@ -11,7 +11,7 @@ Scale posture: the iteration is plain label propagation ("hash-min"),
 each round a distributed join + min-aggregate; rounds needed = graph
 diameter. Near-dup graphs are overwhelmingly tiny star/clique
 clusters (diameter ≤ ~3), so convergence is fast. Each round is ONE
-job: a lazy localCheckpoint truncates the plan and the convergence
+job: a lazy checkpoint truncates the plan and the convergence
 count materializes its blocks (plans don't grow unboundedly). For
 adversarial long-chain graphs, the large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from ..session import cut_lineage, track_persist
 
 # Introspection: rounds the last connected_components call took to
 # reach the label fixpoint (the changed==0 exit round included).
@@ -100,7 +102,7 @@ def connected_components(
             )
         )
         # ONE job per round (r18, the same fusion connected_components_
-        # star got in r17): a LAZY localCheckpoint truncates the
+        # star got in r17): a LAZY checkpoint truncates the
         # round's LOGICAL plan at creation (without the cut the plan
         # string grows geometrically — measured 9.5 MB / 798 nested
         # references after ~6 rounds), and the convergence-count job
@@ -108,10 +110,8 @@ def connected_components(
         # (MEMORY_AND_DISK, lineage truncated on job completion) and
         # answers the fixpoint test — the previous eager-checkpoint-
         # then-count shape paid a second full job per round for the
-        # same rows. Blocks are RDD-owned (freed by the context
-        # cleaner once the round's frame is dropped — the cut_lineage
-        # trade, fine for slim label relations).
-        new_labels = new_labels.localCheckpoint(eager=False)
+        # same rows.
+        new_labels = cut_lineage(new_labels, eager=False)
         changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.select("node", "cluster")
         if changed == 0:
@@ -225,25 +225,22 @@ def connected_components_star(
             )
             # Eager checkpoint per round — the CC lineage law: an
             # unmaterialized round is re-derived by the next one.
-            lab = (
-                lab.join(nbr_min, "node", "left")
-                .select(
+            lab = cut_lineage(
+                lab.join(nbr_min, "node", "left").select(
                     "node",
                     F.least(
                         F.col("l"), F.coalesce("nl", F.col("l"))
                     ).alias("l"),
                 )
-                .localCheckpoint(eager=True)
             )
         sym0.unpersist()
         pre = lab  # (node, l): node -> min id of its k-hop neighborhood
-        contracted = (
+        contracted = cut_lineage(
             e.join(pre.select(F.col("node").alias("u"), F.col("l").alias("lu")), "u")
             .join(pre.select(F.col("node").alias("v"), F.col("l").alias("lv")), "v")
             .select(F.col("lu").alias("u"), F.col("lv").alias("v"))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         e.unpersist()
         e = contracted.persist(StorageLevel.MEMORY_AND_DISK)
@@ -277,7 +274,7 @@ def connected_components_star(
                 .where(F.col("u") != F.col("v"))
                 .distinct()
             )
-        # ONE job per round (r17): a LAZY localCheckpoint truncates the
+        # ONE job per round (r17): a LAZY checkpoint truncates the
         # round's LOGICAL plan immediately (the returned frame scans a
         # LogicalRDD — without the cut each round references `e` ~6
         # times, so plan size grows multiplicatively and the driver
@@ -286,13 +283,11 @@ def connected_components_star(
         # blocks (MEMORY_AND_DISK, lineage truncated on job
         # completion) and answers convergence — the previous
         # eager-checkpoint-then-count shape paid a second full job per
-        # round for the same result. Blocks are RDD-owned (freed by
-        # the context cleaner once the round's frame is dropped — the
-        # cut_lineage trade, fine for slim edge lists). The fixpoint
-        # test is unchanged: any full-outer row with a NULL side is an
-        # edge present in exactly one of the two sets. (A bare
-        # left-anti count is NOT sufficient — new_e ⊂ e gives 0.)
-        new_e = cur.localCheckpoint(eager=False)
+        # round for the same result. The fixpoint test is unchanged:
+        # any full-outer row with a NULL side is an edge present in
+        # exactly one of the two sets. (A bare left-anti count is NOT
+        # sufficient — new_e ⊂ e gives 0.)
+        new_e = cut_lineage(cur, eager=False)
         changed = (
             new_e.withColumn("__a", F.lit(1))
             .join(e.withColumn("__b", F.lit(1)), ["u", "v"], "full_outer")
@@ -336,7 +331,7 @@ def connected_components_star(
     # three survivorship arms audited at 550 joins / 224 exchanges
     # before this (round-10 plan audit), ~30 after. One extra small job
     # here buys a scan-sized plan for every downstream subtree.
-    labels = labels.localCheckpoint(eager=True)
+    labels = cut_lineage(labels)
     e.unpersist()
     all_nodes.unpersist()
     return labels
@@ -410,8 +405,6 @@ def clustering_rand_index(
         .groupBy("__ca", "__cb")
         .agg(F.count(F.lit(1)).alias("nij"))
     )
-    from ..session import track_persist
-
     cells = track_persist(cells)
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
 
@@ -498,8 +491,6 @@ def degree_assortativity(
         )
         .select("e.u", "e.v")
     )
-    from ..session import track_persist
-
     sym = track_persist(sym)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u").alias("__u"), F.col("d").alias("dx"))
@@ -573,8 +564,6 @@ def pagerank_integer(
     edges: (src: string, dst: string), pre-deduplicated.
     Returns (node: string, rank_scaled: long).
     """
-    from ..session import track_persist
-
     teleport_mass = (100 - damping_pct) * scale // 100
     # Loop invariants persist ONCE: without this, every iteration's plan
     # re-executes the edge build (and its dedup shuffle) from source —
@@ -633,7 +622,7 @@ def kcore_peel(
     Scale posture: per round ONE semi-join of the symmetrized edge
     list against the survivor set (edge-keyed shuffle) + ONE
     groupBy(node) degree count with map-side partials; survivor
-    lineage is cut every round (eager localCheckpoint — the CC
+    lineage is cut every round (a checkpoint — the CC
     lesson, see module header). Edges symmetrize + dedup once up
     front and stay persisted across rounds.
 
@@ -644,8 +633,6 @@ def kcore_peel(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    from ..session import track_persist
-
     sym = track_persist(
         edges.select(
             F.explode(
@@ -678,7 +665,7 @@ def kcore_peel(
         # convergence scalar; the previous eager-then-count shape paid
         # a second full job per round. Plan stays flat either way (the
         # returned frame scans the checkpointed RDD).
-        survivors = survivors.localCheckpoint(eager=False)
+        survivors = cut_lineage(survivors, eager=False)
         n_next = survivors.count()
         alive = survivors.select(F.col("u").alias("node"))
         if n_alive is not None and n_next == n_alive:
@@ -719,7 +706,7 @@ def triangle_counts(
     triangle.
 
     ``und`` and ``oriented`` are each referenced 2-3 times downstream;
-    lineage is cut (localCheckpoint, the pagerank/CC lesson) rather
+    lineage is cut (cut_lineage, the pagerank/CC lesson) rather
     than persisted, because nested multi-reference makes the *plan*
     grow geometrically even when the cache executes once — the
     checkpoint keeps both the execution AND the plan linear.
@@ -733,7 +720,7 @@ def triangle_counts(
         .where(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
     )
-    und = und.localCheckpoint(eager=False)
+    und = cut_lineage(und, eager=False)
     deg = (
         und.select(F.col("a").alias("node"))
         .union(und.select(F.col("b")))
@@ -768,7 +755,7 @@ def triangle_counts(
         )
         .select("e.u", "e.v", "e.dv")
     )
-    oriented = oriented.localCheckpoint(eager=False)
+    oriented = cut_lineage(oriented, eager=False)
     e1 = oriented.select(
         F.col("u"), F.col("v").alias("v1"), F.col("dv").alias("dv1")
     )
@@ -821,8 +808,6 @@ def pagerank_personalized(
     seeds: DataFrame with a ``node`` column. Returns
     (node, rank_scaled).
     """
-    from ..session import track_persist
-
     teleport_mass = (100 - damping_pct) * scale // 100
     edges = track_persist(edges)
     deg = track_persist(
@@ -903,7 +888,7 @@ def _pagerank_loop(
                 ).alias("r"),
             )
         )
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = cut_lineage(ranks, eager=False)
     return ranks.select("node", F.col("r").alias("rank_scaled"))
 
 
@@ -982,8 +967,8 @@ def bfs_hops(
     FIRST (minimal) hop — no min() reduction needed. `rounds` bounds
     the unrolled plan (the k-core/pagerank anytime contract: fixed
     rounds, exact integers, deterministic regardless of scheduling);
-    nodes not reached within `rounds` report as hop -1. Eager
-    localCheckpoint per round keeps lineage linear (the plan-fan-in
+    nodes not reached within `rounds` report as hop -1. A
+    checkpoint per round keeps lineage linear (the plan-fan-in
     lesson from the unigram-LM DP).
 
     Returns (hop, n_nodes) ordered by hop; the -1 row only when
@@ -995,12 +980,10 @@ def bfs_hops(
     # edge-build lineage re-executes per round — measured 17s -> ~4s
     # on the co-supply graph at sf0.1 (the build is the shared
     # kcore/triangles self-join).
-    sym = (
+    sym = cut_lineage(
         half.union(
             half.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
+        ).distinct()
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     seed = (
@@ -1008,7 +991,7 @@ def bfs_hops(
         .limit(1)
         .select(F.col("u").alias("node"), F.lit(0).cast("int").alias("hop"))
     )
-    seed = seed.localCheckpoint(eager=True)
+    seed = cut_lineage(seed)
     # ONE job per round (r17): the frontier is LAZY-checkpointed and
     # its count job both materializes the checkpoint blocks and
     # answers the emptiness probe — the previous shape paid three jobs
@@ -1022,13 +1005,13 @@ def bfs_hops(
         settled = levels[0].select("node")
         for lv in levels[1:]:
             settled = settled.union(lv.select("node"))
-        nxt = (
+        nxt = cut_lineage(
             frontier.join(sym, frontier["node"] == sym["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(settled, "node", "left_anti")
-            .withColumn("hop", F.lit(h).cast("int"))
-            .localCheckpoint(eager=False)
+            .withColumn("hop", F.lit(h).cast("int")),
+            eager=False,
         )
         n_new = nxt.count()
         frontier = nxt
@@ -1099,8 +1082,6 @@ def hits_bipartite(
         .where(F.col("l").isNotNull() & F.col("r").isNotNull())
         .distinct()
     )
-    from ..session import track_persist
-
     e = track_persist(e)
     a = e.select("r").distinct().withColumn(
         "s", F.lit(1).cast("decimal(38,0)")

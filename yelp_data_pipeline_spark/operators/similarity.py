@@ -25,13 +25,17 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.vectors import cosine, dot, norm
-from ..session import ensure_min_parallelism
+from ..session import cut_lineage, ensure_min_parallelism, track_persist
 
 
 def _lit_vector_sql(vec) -> str:
     """SQL text of a literal double array (exact repr round-trip —
-    see :func:`_lit_vector`)."""
-    return "array(" + ",".join(repr(float(x)) + "D" for x in vec) + ")"
+    see :func:`_lit_vector`). Non-finite values have no SQL literal;
+    they are spelled as a constant-folded string cast instead."""
+    return "array(" + ",".join(
+        repr(x) + "D" if math.isfinite(x) else f"CAST('{x!r}' AS DOUBLE)"
+        for x in map(float, vec)
+    ) + ")"
 
 
 def _dot_lit_expr(vec_col_name: str, vec) -> F.Column:
@@ -64,13 +68,10 @@ def _lit_vector(vec) -> F.Column:
     element-wise CreateArray to the same array Literal this produces
     directly. ``repr(float)`` is the shortest exact round-trip form
     and Spark's SQL lexer parses it back to the bit-identical double
-    (verified incl. exponent forms, -0.0, 5e300). Non-finite values
-    (inf/nan) have no SQL literal — fall back to element-wise lits.
+    (verified incl. exponent forms, -0.0, 5e300); inf/nan go through
+    a string cast (:func:`_lit_vector_sql`).
     """
-    xs = [float(x) for x in vec]
-    if all(math.isfinite(x) for x in xs):
-        return F.expr("array(" + ",".join(repr(x) + "D" for x in xs) + ")")
-    return F.array(*[F.lit(x).cast("double") for x in xs])
+    return F.expr(_lit_vector_sql(vec))
 
 
 def _query_vector_lit(vec: list[float]) -> F.Column:
@@ -240,8 +241,6 @@ def cosine_neardup_pairs(
     # Three consumers (sign bits + both verify joins) — persist so the
     # scan + norm fold run once, not per consumer; tracked so the
     # session driver can release it after materialization.
-    from ..session import track_persist
-
     pre = track_persist(
         ensure_min_parallelism(df).select(
             F.col(id_col).alias("id"),
@@ -567,8 +566,6 @@ def neardup_pairs_ivf(
     branch engages and agrees with flat routing at full coverage.
     """
     from pyspark.sql import Window
-
-    from ..session import track_persist
 
     cents = kmeans_centroids(df, k_cells, iters, id_col, vec_col, round_to)
     pre = track_persist(
@@ -1306,8 +1303,6 @@ def _top_pc_state(
     See :func:`embedding_top_pc` for the numerics contract."""
     from pyspark.sql import Window
 
-    from ..session import ensure_min_parallelism, track_persist
-
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     base = ensure_min_parallelism(df).select(v.alias("v"))
 
@@ -1415,19 +1410,13 @@ def _top_pc_state(
         )
     # Degenerate-input semantics mirror the previous IN-PLAN loop
     # exactly (r18, advisor items): Spark's double arithmetic
-    # propagates NULL through + and *, divides by 0.0 the IEEE way
-    # (±Inf, 0/0 = NaN — doubles never ANSI-error), and its sort/
-    # comparison order treats NaN as LARGER than any double. Python
-    # floats raise on /0.0 and order NaN incoherently, so both get
-    # explicit shims instead of bare operators.
+    # propagates NULL through + and *, its non-ANSI Divide yields NULL
+    # for a zero divisor (as DuckDB's does), and its sort/comparison
+    # order treats NaN as LARGER than any double. Python floats raise
+    # on /0.0 and order NaN incoherently, so both get explicit shims
+    # instead of bare operators.
     def _spark_div(a, b):
-        if a is None or b is None:
-            return None
-        if b == 0.0:
-            if a == 0.0 or math.isnan(a):
-                return math.nan
-            return math.copysign(math.inf, a)
-        return a / b
+        return None if a is None or b is None or b == 0.0 else a / b
 
     def _spark_abs_key(x):
         # Sort key for ORDER BY abs(vj) DESC: NULLS LAST, NaN first.
@@ -1515,7 +1504,7 @@ def embedding_top_pc(
        + per-i fold over a j-SORTED array (never a shuffle-ordered
        float sum), normalization via sqrt (IEEE correctly rounded,
        allowed by the float rules — unlike ln/exp) of an i-sorted
-       fold. 1-row/64-row eager localCheckpoints keep lineage linear.
+       fold.
 
     Sign convention (eigenvectors are sign-ambiguous): the component
     with the largest |loading| (smallest index on ties) is made
@@ -2072,7 +2061,7 @@ def mmr_diversify(
 
     Plan: one broadcast-query corpus scan builds the per-query
     top-``pool`` candidate list (rounded-score/id total order),
-    materialized ONCE (eager localCheckpoint — the loop-input rule;
+    materialized ONCE (eager cut_lineage — the loop-input rule;
     each greedy step re-references it). Each of the k-1 steps is
     bounded work on <= pool*k rows per query: candidate x picked
     cosines, a max per candidate, one per-qid argmax window. Greedy
@@ -2097,11 +2086,10 @@ def mmr_diversify(
     w_rel = Window.partitionBy("qid").orderBy(
         F.desc("rel"), F.asc("vid")
     )
-    cand = (
+    cand = cut_lineage(
         scored.withColumn("rn", F.row_number().over(w_rel))
         .where(F.col("rn") <= pool)
         .drop("rn")
-        .localCheckpoint(eager=True)
     )
     picked = (
         cand.withColumn("rn", F.row_number().over(w_rel))
@@ -2166,7 +2154,7 @@ def mmr_diversify(
         # each step references `picked` three times, so a lazy union
         # chain re-embeds every prior step's plan 3^i times — audited
         # at 900 exchanges unchecked vs ~40 with the cut.
-        picked = picked.unionByName(nxt).localCheckpoint(eager=True)
+        picked = cut_lineage(picked.unionByName(nxt))
     return picked.select(
         "qid",
         "pos",

@@ -1692,7 +1692,7 @@ def perceptron_quality_gate(
     metadata-bounded-collect contract as the versioned layer and the
     BPE trainer. (The previous form kept the weights as a 1-row
     DataFrame chained through per-epoch broadcast crossJoins plus a
-    second 1-row eager localCheckpoint per epoch — 2 Spark jobs per
+    second 1-row eager checkpoint per epoch — 2 Spark jobs per
     epoch where the training pass itself needs 1; measured 12.0s →
     5.1s at sf0.1 for identical output.) Both engines still run
     exactly ``epochs`` data passes; the corpus is only ever touched

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import cut_lineage
+
 
 def scd2_versions(
     df,
@@ -248,7 +250,7 @@ def compact_small_files(
     Mechanics: ONE metadata listing sizes the table (no data read),
     one read→repartition(n)→overwrite pass rewrites it. Because the
     plan reads the very files the overwrite deletes, the data stages
-    through an eager localCheckpoint (executor memory+local disk)
+    through an eager cut_lineage (executor memory+local disk)
     before the write — fine for per-partition / per-table maintenance
     batches, but a 100 TB whole-table compaction should loop this
     operator over partitions (each batch bounded by executor local
@@ -277,7 +279,7 @@ def compact_small_files(
         out = df.repartition(n_target)
     # Materialize BEFORE overwriting the source directory: the plan
     # reads the very files the overwrite deletes.
-    rows = out.localCheckpoint(eager=True)
+    rows = cut_lineage(out)
     rows.write.mode("overwrite").parquet(path)
     n_after, _ = table_file_stats(spark, path)
     return n_before, n_after

@@ -2111,7 +2111,7 @@ def optimize_versioned(
     :func:`vacuum_versioned` retires them.
 
     Unlike :func:`~.upsert.compact_small_files` (the plain-parquet
-    compactor), no localCheckpoint staging is needed: the rewrite
+    compactor), no checkpoint staging is needed: the rewrite
     lands in a fresh ``data/<commit-id>/`` directory, never
     overwriting the files it reads — the manifest swap IS the commit.
 

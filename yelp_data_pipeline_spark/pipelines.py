@@ -339,13 +339,9 @@ def curate_documents_job(
     # less strict run must not survive — dynamic overwrite would leave
     # them in place whenever the new run emits fewer languages.
     write_partitioned(curated, out_dir, ["lang"], dynamic=False)
-    # The write above materialized every operator-persisted relation
-    # (MinHash signatures, CC labels); release them so a long-lived
-    # session doesn't accumulate cached blocks.
-    from .session import release_tracked
-
-    release_tracked()
     # Return the written plan, not a read-back: a legitimately empty
     # result leaves no parquet footer to infer a schema from, and the
-    # job must not throw on it.
+    # job must not throw on it. The plan still reads the operators'
+    # held frames (MinHash signatures, CC labels), so the caller
+    # releases them once it is done with it.
     return curated

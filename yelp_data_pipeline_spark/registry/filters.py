@@ -5,6 +5,7 @@ Split from the single-file queries.py (round 15). Modules are imported by regist
 
 from __future__ import annotations
 
+from ..session import cut_lineage
 from .core import F, _q, _t, agg, cl  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -457,7 +458,7 @@ def q_sql_catalog_orders_rollup(spark, sf_dir):
     out = spark.sql(
         f"SELECT o_orderpriority, n_orders, total_price FROM {name}"
     )
-    rows = out.localCheckpoint(eager=True)
+    rows = cut_lineage(out)
     spark.sql(f"DROP TABLE {name}")
     shutil.rmtree(tmp_root, ignore_errors=True)
     return rows

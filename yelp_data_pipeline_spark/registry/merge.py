@@ -5,6 +5,7 @@ Split from the single-file queries.py (round 15). Modules are imported by regist
 
 from __future__ import annotations
 
+from ..session import cut_lineage
 from .core import F, _q, _t, up  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -67,11 +68,11 @@ def _versioned_orders_replay(spark, sf_dir):
 
 def _checkpoint_and_clean(df, tmp_root):
     """Materialize the result off the temp table's files (eager
-    localCheckpoint — executor-local storage), then delete the temp
+    cut_lineage — executor-local storage), then delete the temp
     dir so repeated sweeps don't accrete /tmp snapshots."""
     import shutil
 
-    rows = df.localCheckpoint(eager=True)
+    rows = cut_lineage(df)
     shutil.rmtree(tmp_root, ignore_errors=True)
     return rows
 

@@ -5,6 +5,7 @@ Split from the single-file queries.py (round 15). Modules are imported by regist
 
 from __future__ import annotations
 
+from ..session import cut_lineage
 from .core import F, _q, _t, sw  # noqa: F401
 
 # --------------------------------------------------------------------------
@@ -121,9 +122,7 @@ def q_orders_versioned_stream_roundtrip(spark, sf_dir):
     vt.append_versioned(o.filter(F.month("o_orderdate").isin(7, 8)), src)
 
     def sink(batch_df, batch_id):
-        vt.append_versioned_stream(
-            batch_df.localCheckpoint(eager=True), dst, batch_id
-        )
+        vt.append_versioned_stream(cut_lineage(batch_df), dst, batch_id)
 
     q = (
         spark.readStream.format("versioned_table")
@@ -141,6 +140,6 @@ def q_orders_versioned_stream_roundtrip(spark, sf_dir):
     out = vt.read_version(spark, dst).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    rows = out.localCheckpoint(eager=True)
+    rows = cut_lineage(out)
     shutil.rmtree(tmp_root, ignore_errors=True)
     return rows

@@ -1068,7 +1068,7 @@ LIMIT {k}"""
     "anytime-iteration frame. Everything after the one corpus scan "
     "runs on the DISTINCT-WORD relation; the lattice is max_word_len "
     "bounded, UNROLLED DP levels (word-keyed join per level, eager "
-    "localCheckpoint so the ~4^L logical-plan fan-in never builds), "
+    "checkpoint so the ~4^L logical-plan fan-in never builds), "
     "then a bounded backpointer walk. No ln(): Viterbi compares raw "
     "probability products (identical association order both engines), "
     "and the OUTPUT is integer-only (piece, em_count, seed_freq).",

@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the package's one storage registry.
 
 The reference runs Spark 3.3 standalone with zero query-level tuning
 (`/root/reference/mnt/spark-conf/spark-defaults.conf` is S3A/Delta wiring
@@ -7,88 +7,99 @@ for free at scale: AQE (runtime coalescing, skew-join splitting,
 broadcast demotion), Arrow for the few pandas-UDF paths, and a shuffle
 partition count sized for the local harness but overridable for a real
 cluster via environment.
+
+Storage contract: every persist or checkpoint package code makes for
+later release goes through :func:`track_persist` or
+:func:`cut_lineage`, and is freed by the enclosing
+:func:`storage_scope` or by :func:`release_tracked`. Nothing else in
+the package persists across a call or checkpoints.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-# Multi-consumer relations persisted inside operators (MinHash
-# signatures, LSH pre-projections, rank value-counts). The operator
-# cannot unpersist them itself — the returned plan still references the
-# cached relation — so they register here and the *driver* of the
-# session (bench loop, oracle sweep, pipeline entry point, test
-# teardown) releases them once the consuming action has materialized.
-_TRACKED_PERSISTS: list[DataFrame] = []
+# Frames held for the current unit of work, in registration order:
+# (frame, is_checkpoint). An operator cannot free these itself — the
+# plan it returns still reads them — so the driver frees them once
+# the consuming action has materialized.
+_HELD: list[tuple[DataFrame, bool]] = []
 
 
 def track_persist(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 ) -> DataFrame:
-    """persist() + register for deferred release via release_tracked().
-
-    Contract: callers of operators that use this must call
-    ``release_tracked()`` after materializing the returned plan;
-    long-lived sessions otherwise accumulate cached blocks (executor
-    storage pressure at scale).
-    """
+    """persist() a multi-consumer relation and hold it for release."""
     out = df.persist(level)
-    _TRACKED_PERSISTS.append(out)
+    _HELD.append((out, False))
     return out
 
 
-def release_tracked(blocking: bool = False) -> int:
-    """Unpersist every tracked relation; returns how many were released.
+def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``localCheckpoint`` and hold the blocks for release.
 
-    SINGLE-DRIVER CONTRACT: the registry is process-global and this
-    releases EVERYTHING tracked, so exactly one driver loop per
-    process may own the build→materialize→release cycle. Calling it
-    between building and materializing two plans (or from a second
-    thread) unpersists relations a still-pending plan depends on —
-    correct results, but a silent full recompute of e.g. a MinHash
-    signature relation. All in-repo drivers (bench, check_oracle,
-    pipelines, test teardown) follow the pattern: materialize every
-    consuming action first, release once at the end of the unit of
-    work. For concurrent-session deployments, scope tracking per
-    driver (snapshot ``_TRACKED_PERSISTS[:]`` before building, release
-    only that slice) rather than sharing this global."""
+    The returned frame plans as a scan of the checkpointed blocks, so
+    consumers neither re-embed the producing subtree in their plans
+    (iterative loops: plan strings grow geometrically without a cut)
+    nor recompute it — with ``eager=True`` it is computed exactly once,
+    up front, even when consumers materialize concurrently (broadcast
+    arms race past a lazy persist's unpopulated cache). ``eager=False``
+    truncates the plan now and fills the blocks in the first job that
+    reads them. Lineage-based recovery after executor loss is off for
+    the relation, so keep it to slim relations (pair lists, label
+    maps); wide text columns would be copied into block storage."""
+    out = df.localCheckpoint(eager=eager)
+    _HELD.append((out, True))
+    return out
+
+
+def _release_to(mark: int, blocking: bool) -> int:
     n = 0
-    while _TRACKED_PERSISTS:
-        df = _TRACKED_PERSISTS.pop()
+    while len(_HELD) > mark:
+        df, checkpoint = _HELD.pop()
         try:
-            df.unpersist(blocking)
+            if checkpoint:
+                # df.unpersist() is a no-op here: the blocks belong to
+                # the RDD under the frame's LogicalRDD. Once they are
+                # gone a read fails loudly instead of recomputing.
+                df._jdf.queryExecution().analyzed().rdd().unpersist(blocking)
+            else:
+                # Never unpersist a cached frame's RDD directly: that
+                # leaves a stale CacheManager entry and silently
+                # disables re-caching of the same plan.
+                df.unpersist(blocking)
             n += 1
         except Exception:  # session already stopped — nothing to free
             pass
     return n
 
 
-def cut_lineage(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` — materialize NOW and replace the
-    logical plan with a scan of the checkpointed blocks.
+def release_tracked(blocking: bool = False) -> int:
+    """Free every held frame; returns how many were released.
 
-    :func:`track_persist` alone is NOT enough for a slim relation with
-    several expensive-to-derive consumers: every consumer still embeds
-    the full producing subtree in its analyzed/optimized plan (plan
-    audits count the whole lineage once per consumer), and when
-    consumers materialize CONCURRENTLY — Spark broadcasts each
-    ``crossJoin(broadcast(x))`` arm on its own thread — two of them
-    can race past the not-yet-populated cache and BOTH compute the
-    subtree (the `customer_golden_records` 550-join lesson,
-    operators/graph.py:258, applied to eval panes). An eager local
-    checkpoint computes the relation exactly once, up front, and
-    every consumer plans against the materialized blocks.
+    SINGLE-DRIVER CONTRACT: the registry is process-global (arms built
+    on worker threads register into it too), so exactly one driver loop
+    per process owns the build → materialize → release cycle. Release
+    only after every plan built in the unit of work has materialized:
+    a later read of a released checkpoint raises, and a released
+    persist is recomputed. Operators never call this; they use
+    :func:`storage_scope`."""
+    return _release_to(0, blocking)
 
-    Trade: blocks are owned by the RDD (freed on GC/session stop, not
-    by release_tracked), and lineage-based recomputation after
-    executor loss is off for this relation — the right trade for
-    slim, cheap-to-restore relations (pair lists, label maps) with
-    multiple consumers. Do NOT use on wide relations (the text/body
-    columns would be copied into block storage)."""
-    return df.localCheckpoint(eager=True)
+
+@contextmanager
+def storage_scope():
+    """Free, on exit, only what was registered since entry — frames
+    held by an enclosing unit of work stay held."""
+    mark = len(_HELD)
+    try:
+        yield
+    finally:
+        _release_to(mark, False)
 
 
 # Logical operators that introduce a shuffle boundary: below any of

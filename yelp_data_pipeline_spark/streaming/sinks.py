@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.upsert import merge_upsert_df
+from ..session import storage_scope, track_persist
 
 
 def applied_batches(target_path: str) -> set[int]:
@@ -754,16 +755,14 @@ def freeze_dedup_index(
     freeze_psi_reference recipe applied to the dedup tier)."""
     from ..operators.dedup import minhash_index_relations
 
-    keys, sh = minhash_index_relations(
-        corpus_df, id_col, text_col, k=k, bands=bands, n=n
-    )
-    keys.write.mode("overwrite").parquet(ref_path + "_keys")
-    sh.write.mode("overwrite").parquet(ref_path + "_shingles")
     # The helper persists the shared shingle subtree so the two writes
-    # above shingle the corpus once; release now that both are on disk.
-    from ..session import release_tracked
-
-    release_tracked()
+    # shingle the corpus once; the scope frees it once both are on disk.
+    with storage_scope():
+        keys, sh = minhash_index_relations(
+            corpus_df, id_col, text_col, k=k, bands=bands, n=n
+        )
+        keys.write.mode("overwrite").parquet(ref_path + "_keys")
+        sh.write.mode("overwrite").parquet(ref_path + "_shingles")
 
 
 def neardup_gate_batch(
@@ -807,8 +806,6 @@ def neardup_gate_batch(
         batch_df, ikeys, ish, id_col, text_col,
         k=k, bands=bands, n=n, threshold=threshold,
     )
-    from ..session import track_persist
-
     rejects = track_persist(rejects)
     grid = batch_df.agg(
         F.count(F.lit(1)).cast("long").alias("n_seen")
@@ -862,14 +859,12 @@ def neardup_gate_sink(
     the live dup rate. Replay-safe via the batch-id ledger."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_gate_batch(
-            batch_df, batch_id, target_path, ref_path,
-            id_col=id_col, text_col=text_col,
-            k=k, bands=bands, n=n, threshold=threshold,
-        )
-        from ..session import release_tracked
-
-        release_tracked()
+        with storage_scope():
+            neardup_gate_batch(
+                batch_df, batch_id, target_path, ref_path,
+                id_col=id_col, text_col=text_col,
+                k=k, bands=bands, n=n, threshold=threshold,
+            )
 
     return sink
 
@@ -1133,7 +1128,6 @@ def curate_stream_batch(
     except the append-only logs, which are the product.
     """
     from ..operators.dedup import fingerprint
-    from ..session import release_tracked, track_persist
 
     spark = batch_df.sparkSession
     ledger = target_path + "_applied"
@@ -1155,24 +1149,20 @@ def curate_stream_batch(
     fps = batch_df.select(
         F.col(id_col), fingerprint(F.col(text_col)).alias("fp")
     )
-    firsts = track_persist(
-        fps.groupBy("fp")
-        .agg(F.min(id_col).alias(id_col))
-        .join(seen, "fp", "left_anti")
-    )
-    try:
+    # The scope frees the batch's persists even when a Spark action
+    # throws mid-batch, so a failed foreachBatch retry leaks nothing.
+    with storage_scope():
+        firsts = track_persist(
+            fps.groupBy("fp")
+            .agg(F.min(id_col).alias(id_col))
+            .join(seen, "fp", "left_anti")
+        )
         return _curate_stream_batch_body(
             batch_df, batch_id, target_path, ref_path, spark, seen,
             firsts, marker, fp_path, pk_path, id_col, text_col,
             quality_min, min_tokens, max_tokens, seq_len, n_shards,
             salt, k, bands, n, threshold,
         )
-    finally:
-        # Drain the tracked persist even when a Spark action throws
-        # mid-batch (ADVICE r14): without this, a failed foreachBatch
-        # retry leaks the cached `firsts` frame until some LATER
-        # successful batch happens to call release_tracked().
-        release_tracked()
 
 
 def _curate_stream_batch_body(

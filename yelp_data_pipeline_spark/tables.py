@@ -92,12 +92,6 @@ def read_csv_source(
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
     """Register each table as a temp view so the SQL entry point
     (SURVEY.md §3 entry point 3 — Trino/Superset serving path) is
